@@ -20,8 +20,9 @@ Spark pipeline over Common-Crawl-style page tables:
   ``pyspark.sql.functions`` (JVM-side) wherever expressible.
 - ``fixtures``    — deterministic synthetic corpus generator + golden
   capture (analogue of ``baselines/`` in the reference).
-- ``sources``     — parquet/Iceberg-shaped IO plus the ``_metrics`` /
-  ``_checkpoints`` side tables.
+- ``sources``     — parquet/Iceberg-shaped IO plus the ``_metrics`` side
+  table (the ``_checkpoints`` bucket manifests live in
+  ``operators.checkpoint``).
 - ``streaming``   — Structured Streaming ingestion with watermarked
   windowed aggregation.
 """

@@ -69,6 +69,7 @@ def main(argv: list[str] | None = None) -> int:
     args = parse_args(argv)
     from deepseek_ocr_api_rs_spark.conf import build_session
     from deepseek_ocr_api_rs_spark.operators.checkpoint import (
+        committed_buckets,
         run_resumable_extraction,
     )
     from deepseek_ocr_api_rs_spark.operators.extract import extraction_metrics
@@ -85,6 +86,7 @@ def main(argv: list[str] | None = None) -> int:
 
         docs = docs.filter(F.col("lang").isin(args.langs.split(",")))
     run_id = args.run_id or f"run-{int(time.time())}"
+    docs_before = sum(committed_buckets(args.checkpoint_dir).values())
     t0 = time.time()
     n_buckets_done = run_resumable_extraction(
         spark,
@@ -95,11 +97,12 @@ def main(argv: list[str] | None = None) -> int:
         run_id=run_id,
     )
     dt = time.time() - t0
+    docs_done = sum(committed_buckets(args.checkpoint_dir).values()) - docs_before
     out = spark.read.parquet(args.output)
     n = out.count()
     print(
         f"extraction complete: {n} docs, {n_buckets_done} buckets this run, "
-        f"{dt:.1f}s ({n / max(dt, 1e-9):.0f} docs/sec)"
+        f"{dt:.1f}s ({docs_done / max(dt, 1e-9):.0f} docs/sec)"
     )
     metrics = extraction_metrics(out)
     if args.metrics_path:

@@ -1,4 +1,4 @@
-"""Per-partition checkpoint manifests + resume (north_rule: "resumable from
+"""Per-bucket checkpoint manifests + resume (north_rule: "resumable from
 checkpoint with per-partition lineage + metrics").
 
 Design (the KV-cache idea at job granularity — incremental computation,
@@ -7,29 +7,45 @@ crates/core/src/cache.rs:78-116, applied to partitions instead of tokens):
 - the input is bucketed into ``n_buckets`` deterministic url-hash buckets
   (``pmod(xxhash64(url), n_buckets)`` — stable across runs, unlike
   ``spark_partition_id`` which depends on scheduling);
-- each completed bucket appends one manifest row
-  ``(bucket, run_id, n_docs, n_chars, n_accepted, committed_ts)`` to the
-  ``_checkpoints`` table (on Iceberg this is an atomic append per commit);
-- resume = anti-join the input's buckets against committed manifest rows,
-  so a killed run re-reads only uncommitted buckets.
+- each bucket is ONE Spark job: its rows are extracted and written under
+  ``<output_dir>/bucket=<k>``. An empty bucket is written and committed
+  too, with ``n_docs = 0``;
+- the bucket is then committed on the driver by publishing the one-row
+  parquet file ``_checkpoints/bucket-<k>.parquet`` with schema
+  ``(bucket int, run_id string, n_docs long, committed_ts double)``.
+  ``n_docs`` is the footer row count of the files just written, so no
+  read-back scan runs. The row is written to a ``.tmp-*`` file (Spark and
+  pyarrow both skip dot-files) and ``os.link``-ed into place, which fails
+  if the bucket is already committed: a bucket commits at most once;
+- resume reads the ``bucket`` and ``n_docs`` columns of ``_checkpoints``
+  and runs the uncommitted buckets in ascending order. Manifests written
+  by Spark in the earlier six-column layout
+  ``(…, n_chars, n_blocks_accepted, …)`` resume the same way.
 
-Output data for a bucket is written under ``bucket=<k>`` directories and the
-manifest row is appended AFTER the data write succeeds — a bucket is either
-fully committed (manifest row exists) or will be re-done; re-doing an
-uncommitted bucket just overwrites its directory (idempotent).
+Data first, then manifest: a bucket is either committed (its manifest file
+exists) or will be re-done; re-doing an uncommitted bucket overwrites its
+directory (idempotent).
 """
 
 from __future__ import annotations
 
 import os
 import time
+import uuid
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-MANIFEST_SCHEMA = (
-    "bucket int, run_id string, n_docs long, n_chars long, "
-    "n_blocks_accepted long, committed_ts double"
+MANIFEST_SCHEMA = pa.schema(
+    [
+        ("bucket", pa.int32()),
+        ("run_id", pa.string()),
+        ("n_docs", pa.int64()),
+        ("committed_ts", pa.float64()),
+    ]
 )
 
 
@@ -43,43 +59,34 @@ def manifest_path(checkpoint_dir: str) -> str:
     return os.path.join(checkpoint_dir, "_checkpoints")
 
 
-def committed_buckets(spark: SparkSession, checkpoint_dir: str) -> set[int]:
+def committed_buckets(checkpoint_dir: str) -> dict[int, int]:
+    """``{bucket: n_docs}`` of every committed bucket; ``{}`` when nothing
+    was ever committed. An unreadable manifest raises: treating it as empty
+    would redo and double-commit every bucket."""
     path = manifest_path(checkpoint_dir)
+    if not os.path.isdir(path):
+        return {}
+    cols = pa.schema([MANIFEST_SCHEMA.field("bucket"), MANIFEST_SCHEMA.field("n_docs")])
+    t = ds.dataset(path, schema=cols, format="parquet").to_table()
+    return dict(zip(t.column("bucket").to_pylist(), t.column("n_docs").to_pylist()))
+
+
+def commit_bucket(checkpoint_dir: str, bucket: int, run_id: str, n_docs: int) -> None:
+    """Publish the bucket's manifest row; raises ``FileExistsError`` if the
+    bucket is already committed."""
+    path = manifest_path(checkpoint_dir)
+    os.makedirs(path, exist_ok=True)
+    row = pa.Table.from_pylist(
+        [{"bucket": bucket, "run_id": run_id, "n_docs": n_docs,
+          "committed_ts": time.time()}],
+        schema=MANIFEST_SCHEMA,
+    )
+    tmp = os.path.join(path, f".tmp-{uuid.uuid4().hex}.parquet")
+    pq.write_table(row, tmp)
     try:
-        rows = spark.read.parquet(path).select("bucket").distinct().collect()
-    except Exception:
-        return set()
-    return {r.bucket for r in rows}
-
-
-def commit_bucket(
-    spark: SparkSession,
-    checkpoint_dir: str,
-    bucket: int,
-    run_id: str,
-    n_docs: int,
-    n_chars: int,
-    n_blocks_accepted: int,
-) -> None:
-    row = [(bucket, run_id, n_docs, n_chars, n_blocks_accepted, time.time())]
-    spark.createDataFrame(row, MANIFEST_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(manifest_path(checkpoint_dir))
-
-
-def resume_filter(
-    docs_bucketed: DataFrame, spark: SparkSession, checkpoint_dir: str
-) -> DataFrame:
-    """Drop rows of already-committed buckets.
-
-    Implemented as an IN-filter on the (small) committed-bucket set rather
-    than a join — the bucket list is tiny metadata, so this prunes with a
-    pushed-down predicate instead of a shuffle.
-    """
-    done = committed_buckets(spark, checkpoint_dir)
-    if not done:
-        return docs_bucketed
-    return docs_bucketed.filter(~F.col("bucket").isin(sorted(done)))
+        os.link(tmp, os.path.join(path, f"bucket-{bucket}.parquet"))
+    finally:
+        os.unlink(tmp)
 
 
 def run_resumable_extraction(
@@ -100,31 +107,12 @@ def run_resumable_extraction(
     """
     from deepseek_ocr_api_rs_spark.operators.extract import extract_documents
 
+    committed = committed_buckets(checkpoint_dir)
+    todo = [b for b in range(n_buckets) if b not in committed][:fail_after_buckets]
     bucketed = with_bucket(docs, n_buckets)
-    todo = resume_filter(bucketed, spark, checkpoint_dir)
-    remaining = sorted(
-        r.bucket for r in todo.select("bucket").distinct().collect()
-    )
-    done = 0
-    for bucket in remaining:
-        part = todo.filter(F.col("bucket") == bucket).drop("bucket")
-        extracted = extract_documents(part)
+    for bucket in todo:
+        part = bucketed.filter(F.col("bucket") == bucket).drop("bucket")
         out_path = os.path.join(output_dir, f"bucket={bucket}")
-        extracted.write.mode("overwrite").parquet(out_path)
-        stats = (
-            spark.read.parquet(out_path)
-            .agg(
-                F.count("*").alias("n"),
-                F.coalesce(F.sum("n_chars"), F.lit(0)).alias("c"),
-                F.coalesce(F.sum("n_blocks_accepted"), F.lit(0)).alias("a"),
-            )
-            .collect()[0]
-        )
-        commit_bucket(
-            spark, checkpoint_dir, bucket, run_id,
-            int(stats.n), int(stats.c), int(stats.a),
-        )
-        done += 1
-        if fail_after_buckets is not None and done >= fail_after_buckets:
-            break
-    return done
+        extract_documents(part).write.mode("overwrite").parquet(out_path)
+        commit_bucket(checkpoint_dir, bucket, run_id, ds.dataset(out_path).count_rows())
+    return len(todo)

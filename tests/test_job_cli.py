@@ -34,6 +34,7 @@ def test_job_end_to_end_and_resume(tmp_path, corpus_path):
     r2 = subprocess.run(cmd, capture_output=True, text=True, timeout=600, cwd=REPO, env=env)
     assert r2.returncode == 0, r2.stderr[-2000:]
     assert "extraction complete: 300 docs, 0 buckets this run" in r2.stdout, r2.stdout
+    assert "(0 docs/sec)" in r2.stdout, r2.stdout
 
     import duckdb
 
